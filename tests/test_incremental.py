@@ -608,6 +608,134 @@ def test_ingest_chain_full_replay_is_idempotent(spark, tmp_path):
     assert int(lin["times_updated"].iloc[0]) >= 2  # the replay pass is on record
 
 
+INGEST_SCHEMA = "url string, lang string, warc_ts timestamp, val double, payload string"
+
+
+def _ingest(spark, src, store, ckpt):
+    from tslib_spark.streaming.stream import ingest_to_store
+
+    q = ingest_to_store(
+        spark, src, INGEST_SCHEMA, store, "warc_ts", "val",
+        content_cols=["url", "payload"], watermark="10 minutes", checkpoint_dir=ckpt,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+
+def test_ingest_upsert_reads_only_touched_partitions(spark, tmp_path, monkeypatch):
+    """The merge reads back only the minute partitions the batch touches:
+    every read_tier call of the upsert is bounded to the touched day, the
+    neighbouring days stay as stored and the touched day keeps its
+    earlier buckets next to the new ones."""
+    from tslib_spark.operators.downsample import tier_state_checksum
+    from tslib_spark.operators.retention import TierStore
+    from tslib_spark.operators.rollup import rollup
+
+    base = pd.Timestamp("2026-03-23")  # days base .. base+2 stored
+    stored = pd.DataFrame(
+        [("u0", "en", base + pd.Timedelta(hours=h), float(h), f"s{h}") for h in range(72)],
+        columns=["url", "lang", "warc_ts", "val", "payload"],
+    )
+    keys = ["url", "lang"]
+    store = TierStore(spark, str(tmp_path / "store"), keys, compressed_tiers={"minute"})
+    store.materialize(
+        "minute", rollup(spark.createDataFrame(stored), keys, "warc_ts", "val", "minute")
+    )
+    day = base + pd.Timedelta(days=1)
+    before = {
+        d: tier_state_checksum(store.read_tier("minute", d, d + pd.Timedelta(days=1)), keys)
+        for d in (base, day + pd.Timedelta(days=1))
+    }
+
+    arrivals = pd.DataFrame(
+        [("u1", "en", day + pd.Timedelta(hours=10, minutes=m), float(m), f"a{m}")
+         for m in range(30)]
+        # flush row, same day: advances the watermark past every u1 bucket
+        + [("flush", "xx", day + pd.Timedelta(hours=20), 0.0, "zz")],
+        columns=stored.columns,
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame(arrivals).coalesce(1).write.parquet(src)
+
+    calls = []
+    read_tier = store.read_tier
+
+    def spy(tier, start_ts=None, end_ts=None):
+        calls.append((tier, start_ts, end_ts))
+        return read_tier(tier, start_ts, end_ts)
+
+    monkeypatch.setattr(store, "read_tier", spy)
+    _ingest(spark, src, store, str(tmp_path / "ckpt"))
+    monkeypatch.undo()
+
+    assert calls
+    assert all(c == ("minute", day, day + pd.Timedelta(days=1)) for c in calls), calls
+    for d, chk in before.items():
+        assert tier_state_checksum(
+            store.read_tier("minute", d, d + pd.Timedelta(days=1)), keys
+        ) == chk
+    closed = pd.concat([stored, arrivals[arrivals["url"] != "flush"]], ignore_index=True)
+    want = rollup(spark.createDataFrame(closed), keys, "warc_ts", "val", "minute")
+    got = store.read_tier("minute").filter(F.col("url") != "flush")
+    assert tier_state_checksum(got, keys) == tier_state_checksum(want, keys)
+
+
+def _offsets_conf(ckpt, batch: int) -> dict:
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", str(batch))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_ingest_state_partitions_follow_cores(spark, tmp_path):
+    """The stateful operators get min(shuffle partitions, cores) state
+    partitions; the session's own value is left as it was, and a restart
+    on the checkpoint under another session value keeps the recorded
+    count."""
+    import os
+
+    from tslib_spark.operators.retention import TierStore
+
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    cores = spark.sparkContext.defaultParallelism
+    base = pd.Timestamp("2026-03-30")
+
+    def arrivals(tag, start_min):
+        return pd.DataFrame(
+            [("u1", "en", base + pd.Timedelta(minutes=start_min + m), float(m), f"{tag}{m}")
+             for m in range(20)]
+            + [("flush", "xx", base + pd.Timedelta(minutes=start_min + 60), 0.0, tag)],
+            columns=["url", "lang", "warc_ts", "val", "payload"],
+        )
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    store = TierStore(spark, str(tmp_path / "store"), ["url", "lang"])
+    spark.createDataFrame(arrivals("a", 0)).coalesce(1).write.mode("append").parquet(src)
+    _ingest(spark, src, store, ckpt)
+    recorded = _offsets_conf(ckpt, 0)[key]
+    assert int(recorded) <= cores
+    assert int(recorded) == min(int(session_value), cores)
+    assert spark.conf.get(key) == session_value
+
+    spark.conf.set(key, str(int(recorded) - 1))
+    try:
+        spark.createDataFrame(arrivals("b", 120)).coalesce(1).write.mode("append").parquet(src)
+        _ingest(spark, src, store, ckpt)
+    finally:
+        spark.conf.set(key, session_value)
+    batches = sorted(int(b) for b in os.listdir(os.path.join(ckpt, "offsets")) if b.isdigit())
+    assert len(batches) > 1
+    assert all(_offsets_conf(ckpt, b)[key] == recorded for b in batches)
+    for op in os.listdir(os.path.join(ckpt, "state")):
+        parts = [p for p in os.listdir(os.path.join(ckpt, "state", op)) if p.isdigit()]
+        assert len(parts) == int(recorded), (op, parts)
+    # both batches' closed buckets are stored
+    got = store.read_tier("minute").filter(F.col("url") == "u1").count()
+    assert got == 40
+
+
 def test_legacy_epoch_marker_migrates_without_double_fold(spark, tmp_path, low_rank_series):
     """ADVICE r4: a state dir whose _applied_epoch marker was written by a
     pre-file-set build (epoch counter only, no 'files' key) must fall back

@@ -219,6 +219,86 @@ def test_range_read_prunes_partitions_and_chunks(spark, store_root, minute_sourc
     assert "PartitionFilters" in plan and "part_key" in plan
 
 
+def test_range_read_end_bound_is_exclusive(spark, store_root, minute_source):
+    """An end_ts on a partition boundary does not open the partition that
+    starts there: a one-day minute/hour read scans one directory, and a
+    Monday-to-Monday day-tier read one week."""
+    import pandas as pd
+
+    store = TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})
+    store.materialize_chain(minute_source)
+    d = pd.Timestamp("2024-01-05")
+    monday = pd.Timestamp("2024-01-08")
+    for tier, lo, hi in (
+        ("minute", d, d + pd.Timedelta(days=1)),
+        ("hour", d, d + pd.Timedelta(days=1)),
+        ("day", monday, monday + pd.Timedelta(weeks=1)),
+    ):
+        files = store.read_tier(tier, lo, hi).inputFiles()
+        assert files
+        assert all(f"/part_key={lo.date()}/" in f for f in files), (tier, files)
+    # an end inside a partition still reads that partition
+    files = store.read_tier("minute", d, d + pd.Timedelta(hours=36)).inputFiles()
+    assert {f.split("part_key=")[1][:10] for f in files} == {"2024-01-05", "2024-01-06"}
+
+
+def _jobs_run_by(spark, fn):
+    """Job ids ``fn`` starts on this thread (counted under a job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("probe-jobs", "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup("probe-jobs"))
+
+
+def test_store_reuses_tier_schema_and_opens_without_jobs(spark, store_root, minute_source):
+    """Opening a store starts no Spark job; after the first read of a tier
+    its schema is kept, so a later read starts no inference job and
+    part_key stays a string."""
+    import pandas as pd
+
+    TierStore(spark, store_root, KEYS, compressed_tiers={"minute"}).materialize(
+        "minute", minute_source
+    )
+    opened = []
+    assert _jobs_run_by(
+        spark,
+        lambda: opened.append(TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})),
+    ) == []
+    store = opened[0]
+    d = pd.Timestamp("2024-01-05")
+    first = store.read_tier("minute", d, d + pd.Timedelta(days=1))
+    assert _jobs_run_by(spark, lambda: store.read_tier("minute", d, d + pd.Timedelta(days=1))) == []
+    again = store.read_tier("minute", d, d + pd.Timedelta(days=1))
+    assert tier_state_checksum(again, KEYS) == tier_state_checksum(first, KEYS)
+    assert dict(store.backend.read(spark, "minute", store._schemas["minute"]).dtypes)[
+        "part_key"
+    ] == "string"
+
+
+def test_upsert_from_another_session_keeps_other_partitions(spark, store_root, minute_source):
+    """Dynamic partition overwrite is a property of every tier write, not of
+    the session that built the store: upserting one day from a frame of a
+    fresh session must leave every other partition in place."""
+    import pandas as pd
+
+    store = TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})
+    written = store.materialize("minute", minute_source)
+    want = tier_state_checksum(store.read_tier("minute"), KEYS)
+    d = pd.Timestamp("2024-01-05")
+    other = spark.newSession()
+    day = other.createDataFrame(
+        store.read_tier("minute", d, d + pd.Timedelta(days=1)).toPandas(),
+        schema=minute_source.schema,
+    )
+    assert store.upsert_partitions("minute", day, ["2024-01-05"]) == ["2024-01-05"]
+    parts = sorted(p.name for p in Path(store.tier_path("minute")).glob("part_key=*"))
+    assert parts == [f"part_key={pk}" for pk in sorted(written)]
+    assert tier_state_checksum(store.read_tier("minute"), KEYS) == want
+
+
 def test_catalog_backend_seam(spark, tmp_path):
     """r4: every byte touch goes through the catalog seam. An explicitly
     passed ParquetManifestBackend behaves identically to the default, and

@@ -35,6 +35,19 @@ from tslib_spark.plans.lineage import CheckpointStore
 PART_TRUNC = {"minute": "day", "hour": "day", "day": "week", "week": "week"}
 
 
+def part_key_of(tier: str, ts) -> str:
+    """The ``part_key`` of the ``tier`` partition holding instant ``ts``
+    (week partitions start on Mondays, matching date_trunc('week'))."""
+    from datetime import timedelta
+
+    import pandas as pd
+
+    d = pd.Timestamp(ts).date()
+    if PART_TRUNC[tier] == "week":
+        d -= timedelta(days=d.weekday())
+    return d.isoformat()
+
+
 class TierStore:
     def __init__(
         self,
@@ -63,7 +76,8 @@ class TierStore:
         self.compressed_tiers = set(compressed_tiers)
         self.backend = backend if backend is not None else ParquetManifestBackend(root)
         self.checkpoint = CheckpointStore(str(self.root / "checkpoint.parquet"))
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # {tier: stored schema}, filled by the first read of each tier
+        self._schemas: dict = {}
         # keep part_key a string on read-back (inference would parse it as a
         # DATE and break checkpoint-key equality)
         self.spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
@@ -75,11 +89,28 @@ class TierStore:
     def tier_exists(self, tier: str) -> bool:
         return self.backend.exists(self.spark, tier)
 
+    def _read_stored(self, tier: str, first_pk=None, last_pk=None) -> DataFrame:
+        """The stored rows of ``tier`` with ``part_key``, optionally only the
+        partitions in [first_pk, last_pk]. The first read of a tier infers
+        its schema (one Spark job); later reads pass it."""
+        if tier not in self._schemas:
+            self._schemas[tier] = self.backend.read(self.spark, tier).schema
+        raw = self.backend.read(self.spark, tier, self._schemas[tier], first_pk, last_pk)
+        if first_pk is not None:
+            raw = raw.filter(F.col("part_key") >= first_pk)
+        if last_pk is not None:
+            raw = raw.filter(F.col("part_key") <= last_pk)
+        return raw
+
     def read_tier(self, tier: str, start_ts=None, end_ts=None) -> DataFrame:
         """Read a tier, optionally restricted to [start_ts, end_ts).
 
         Range reads prune at three levels — the point of the layout:
-        1. partition pruning on ``part_key`` (directories never listed);
+        1. partition pruning on ``part_key``: only the partitions holding
+           [start_ts, end_ts) are listed and scanned. ``end_ts`` is
+           exclusive here too, so an end on a partition boundary (midnight
+           for minute/hour, a Monday for day/week) does not open the
+           partition that starts there;
         2. for compressed tiers, CHUNK pruning on ``ts_start`` before any
            decode (a chunk spans at most its partition's time range, so
            chunks starting at/after ``end_ts`` or a full partition-span
@@ -87,19 +118,19 @@ class TierStore:
         3. an exact row filter on the decoded/raw ``bucket_ts``.
         At 100 TB a day's read touches one part_key directory and decodes
         only that day's chunks, not the corpus.
+
+        The store keeps each tier's schema from its first read, so later
+        reads start no schema-inference job.
         """
         import pandas as pd
 
-        raw = self.backend.read(self.spark, tier)
+        first_pk = None if start_ts is None else part_key_of(tier, start_ts)
+        last_pk = (
+            None if end_ts is None
+            else part_key_of(tier, pd.Timestamp(end_ts) - pd.Timedelta(microseconds=1))
+        )
+        raw = self._read_stored(tier, first_pk, last_pk).drop("part_key")
         span_days = {"day": 1, "week": 7}[PART_TRUNC[tier]]
-        if start_ts is not None:
-            pk_lo = (
-                pd.Timestamp(start_ts) - pd.Timedelta(days=span_days)
-            ).strftime("%Y-%m-%d")
-            raw = raw.filter(F.col("part_key") > pk_lo)
-        if end_ts is not None:
-            raw = raw.filter(F.col("part_key") <= pd.Timestamp(end_ts).strftime("%Y-%m-%d"))
-        raw = raw.drop("part_key")
 
         if tier in self.compressed_tiers:
             from tslib_spark.codec.statechunks import decode_state_chunks
@@ -218,7 +249,7 @@ class TierStore:
         )
         # checksum what actually landed (decoded read-back for compressed
         # tiers — the checksum certifies the decodable bytes on disk)
-        landed_raw = self.backend.read(self.spark, tier).filter(
+        landed_raw = self._read_stored(tier, min(pks), max(pks)).filter(
             F.col("part_key").isin(pks)
         )
         if tier in self.compressed_tiers:
@@ -256,16 +287,6 @@ class TierStore:
         return written
 
     # ---------------- verification + retention ----------------
-    def _coarse_part_key(self, fine_pk: str, coarse: str) -> str:
-        """The coarse-tier partition that covers a fine partition key
-        (week truncation = Monday start, matching date_trunc('week'))."""
-        from datetime import date, timedelta
-
-        d = date.fromisoformat(fine_pk)
-        if PART_TRUNC[coarse] == "week":
-            d = d - timedelta(days=d.weekday())
-        return d.isoformat()
-
     def verify_tier_parity(self, fine: str, coarse: str, coarse_pks=None) -> bool:
         """Recompute ``coarse`` from stored ``fine`` and compare checksums
         partition-by-partition against the stored coarse tier; optionally
@@ -329,8 +350,8 @@ class TierStore:
         if not candidates:
             return []
 
-        affected = {self._coarse_part_key(pk, coarse) for pk in candidates}
-        tainted = {self._coarse_part_key(pk, coarse) for pk in already_expired}
+        affected = {part_key_of(coarse, pk) for pk in candidates}
+        tainted = {part_key_of(coarse, pk) for pk in already_expired}
         recomputable = sorted(affected - tainted)
         integrity_only = sorted(affected & tainted)
 

@@ -5,7 +5,11 @@ retention gating) is storage-agnostic; everything that actually touches
 bytes goes through a backend with four operations:
 
     exists(spark, tier)              — does the tier table exist yet
-    read(spark, tier)                — DataFrame over the stored tier
+    read(spark, tier, schema=None, first_pk=None, last_pk=None)
+                                     — DataFrame over the stored tier
+                                       (``schema``: skip inference; the
+                                       part_key bounds: a hint to list
+                                       only those partitions)
     write_partitions(spark, tier, df)— dynamic-overwrite the df's
                                        part_key partitions
     drop_partition(spark, tier, pk)  — physically remove one partition
@@ -48,15 +52,34 @@ class ParquetManifestBackend:
     def exists(self, spark: SparkSession, tier: str) -> bool:
         return (self.root / "tiers" / tier).exists()
 
-    def read(self, spark: SparkSession, tier: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(tier))
+    def read(
+        self, spark: SparkSession, tier: str, schema=None, first_pk=None, last_pk=None
+    ) -> DataFrame:
+        """A ``schema`` (the tier's stored one) spares the inference job.
+        With a part_key bound and a schema, only the ``part_key=``
+        directories within [first_pk, last_pk] are listed and read."""
+        path = self.table_path(tier)
+        if schema is None:
+            return spark.read.parquet(path)
+        reader = spark.read.schema(schema)
+        if first_pk is None and last_pk is None:
+            return reader.parquet(path)
+
+        def in_range(d: Path) -> bool:
+            pk = d.name.split("=", 1)[1]
+            return (first_pk is None or pk >= first_pk) and (last_pk is None or pk <= last_pk)
+
+        dirs = sorted(str(d) for d in Path(path).glob("part_key=*") if in_range(d))
+        return reader.option("basePath", path).parquet(*dirs)
 
     def write_partitions(self, spark: SparkSession, tier: str, df: DataFrame) -> None:
-        """Dynamic partition overwrite (TierStore sets the session conf):
-        only the part_key values present in ``df`` are replaced."""
-        df.write.mode("overwrite").partitionBy("part_key").parquet(
-            self.table_path(tier)
-        )
+        """Dynamic partition overwrite: only the part_key values present in
+        ``df`` are replaced. The mode is a writer option, not a session
+        conf, so a ``df`` of any session (``spark.newSession()``, a
+        streaming batch) never wipes the other partitions."""
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "part_key"
+        ).parquet(self.table_path(tier))
 
     def drop_partition(self, spark: SparkSession, tier: str, part_key: str) -> None:
         part_dir = Path(self.table_path(tier)) / f"part_key={part_key}"
@@ -126,7 +149,11 @@ class IcebergBackend:
     def exists(self, spark: SparkSession, tier: str) -> bool:
         return spark.catalog.tableExists(self._table(tier))
 
-    def read(self, spark: SparkSession, tier: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, tier: str, schema=None, first_pk=None, last_pk=None
+    ) -> DataFrame:
+        # the catalog holds the schema and prunes on TierStore's part_key
+        # filters: nothing to infer or list here
         return spark.table(self._table(tier))
 
     def write_partitions(self, spark: SparkSession, tier: str, df: DataFrame) -> None:

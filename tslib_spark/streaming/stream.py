@@ -9,10 +9,16 @@ tier state, suitable for ``foreachBatch`` upserts into the TierStore.
 
 from __future__ import annotations
 
+import threading
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tslib_spark.operators.rollup import SUM_DECIMAL
+
+# serializes ingest_to_store's swap of the session's shuffle-partition conf
+_START_LOCK = threading.Lock()
 
 
 def streaming_rollup(
@@ -81,9 +87,19 @@ def ingest_to_store(
     next run once later events advance the watermark. That is the
     standard streaming contract; the batch TierStore path stays the
     authority for complete history.
-    """
-    from tslib_spark.operators.rollup import SUM_DECIMAL as _SD
 
+    Cost follows the rows touched, not the store:
+    - the two stateful operators (dedup, window aggregate) run
+      ``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
+      partitions. The conf is set only around ``start()``, where the
+      query clones the session; the session keeps its own value. The
+      checkpoint's offset metadata records the count, so a resumed
+      checkpoint keeps the count it started with;
+    - each micro-batch is persisted for the length of the upsert, which
+      reads it several times (touched partitions, anti-join, union);
+    - the merge reads back only the touched minute partitions, so
+      partition and chunk pruning leave the rest of the tier undecoded.
+    """
     keys = store.keys
     stream = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -100,7 +116,7 @@ def ingest_to_store(
         deduped.groupBy(*[F.col(k) for k in keys], F.window(ts_col, window).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col(measure_col).cast(_SD)).alias("val_sum"),
+            F.sum(F.col(measure_col).cast(SUM_DECIMAL)).alias("val_sum"),
             F.min(F.col(measure_col).cast("double")).alias("val_min"),
             F.max(F.col(measure_col).cast("double")).alias("val_max"),
         )
@@ -108,35 +124,55 @@ def ingest_to_store(
     )
 
     def _upsert(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merged_src = batch_df
-        touched = [
-            r["part_key"]
-            for r in store._with_part_key(batch_df, "minute")
-            .select("part_key").distinct().collect()
-        ]
-        if store.tier_exists("minute"):
-            # bucket-level REPLACE, not sum-merge: append mode emits every
-            # bucket exactly once, so an existing row for the same
-            # (keys, bucket_ts) can only be this batch's own earlier
-            # replayed write — replacing is idempotent under foreachBatch's
-            # at-least-once contract, where re-summing would double-count
-            prev = store._with_part_key(store.read_tier("minute"), "minute").filter(
-                F.col("part_key").isin(touched)
-            ).drop("part_key")
-            keep = prev.join(
-                batch_df.select(*keys, "bucket_ts"), [*keys, "bucket_ts"], "left_anti"
+        batch_df.persist()
+        try:
+            touched = sorted(
+                r["part_key"]
+                for r in store._with_part_key(batch_df, "minute")
+                .select("part_key").distinct().collect()
             )
-            merged_src = batch_df.unionByName(keep)
-        store.upsert_partitions("minute", merged_src, touched)
+            if not touched:
+                return
+            merged_src = batch_df
+            if store.tier_exists("minute"):
+                # bucket-level REPLACE, not sum-merge: append mode emits every
+                # bucket exactly once, so an existing row for the same
+                # (keys, bucket_ts) can only be this batch's own earlier
+                # replayed write — replacing is idempotent under foreachBatch's
+                # at-least-once contract, where re-summing would double-count.
+                # Minute partitions are days: read from the first touched day
+                # to the end of the last one.
+                prev = store.read_tier(
+                    "minute",
+                    pd.Timestamp(touched[0]),
+                    pd.Timestamp(touched[-1]) + pd.Timedelta(days=1),
+                )
+                prev = store._with_part_key(prev, "minute").filter(
+                    F.col("part_key").isin(touched)
+                ).drop("part_key")
+                keep = prev.join(
+                    batch_df.select(*keys, "bucket_ts"), [*keys, "bucket_ts"], "left_anti"
+                )
+                merged_src = batch_df.unionByName(keep)
+            store.upsert_partitions("minute", merged_src, touched)
+        finally:
+            batch_df.unpersist()
 
     writer = agg.writeStream.outputMode("append").foreachBatch(_upsert).trigger(
         availableNow=True
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    # start() clones the session and fixes the state-partition count from
+    # it: size the count to the cores, then give the session its value back
+    key, conf = "spark.sql.shuffle.partitions", spark.conf
+    with _START_LOCK:
+        session_value = conf.get(key)
+        conf.set(key, str(min(int(session_value), spark.sparkContext.defaultParallelism)))
+        try:
+            return writer.start()
+        finally:
+            conf.set(key, session_value)
 
 
 def streaming_dedup(
